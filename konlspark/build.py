@@ -4,28 +4,33 @@ Rebuilds the reference write pipeline (``index.py:299-327``: hash →
 dedup → id-assign → tokenize → invert) as Spark jobs designed for
 10^12-turn scale:
 
-- **tokenize**: one ``mapInPandas`` pass (Arrow batches, shared
-  tokenizer — no per-row Python UDFs);
-- **dedup (B2)**: window over ``text_hash`` keeping the first
-  occurrence in stable ``(conv_id, turn_idx)`` order; losers become a
-  CONFLICT side-output with the winner's doc id
+- **dedup (B2)**: a narrow ``(text_hash → count, first key)``
+  aggregate keeps the first occurrence in stable ``(conv_id, turn_idx)``
+  order; losers become a CONFLICT side-output with the winner's doc id
   (reference ``index.py:301-305``);
-- **doc-id assignment (B1)**: dense 1-based ids in stable
+- **doc-id assignment (B1) + tokenize**: dense 1-based ids in stable
   ``(conv_id, turn_idx)`` order, computed scalably as
-  range-repartition → per-partition counts → cumulative offsets →
-  per-partition ``row_number`` — no single-task global window;
-- **posting build (B3)**: explode → *salted* repartition-by-term
-  (explicit skew split for head terms; AQE does not fix groupBy skew) →
-  per-group sort → delta+varint block encoding (``codec``) with
-  per-block max-score metadata for block-max WAND;
+  range-repartition → per-partition counts → broadcast cumulative
+  offsets → per-partition rank, fused with tokenization into ONE
+  ``mapInArrow`` pass (Arrow batches, shared tokenizer — no per-row
+  Python UDFs);
+- **posting build (B3)**: explode → *salted* ``(term, salt)`` keys
+  (explicit skew split for head terms; AQE does not fix key skew) →
+  ``repartition(term, salt)`` + ``sortWithinPartitions(term, salt,
+  doc_id)`` → one ``mapInArrow`` encoder that finds run and block
+  boundaries and delta+varint-encodes every block of an Arrow batch in
+  one numpy pass (``codec``), with per-block max-score metadata for
+  block-max WAND;
+- **token dict**: term → jamo-decomposed key as a native Spark
+  expression (no Python stage);
 - **resumable segmented build (B8/B7)**: postings built per doc-id-range
   segment with a fingerprinted checkpoint + metrics (terms/sec,
-  postings/partition, skew ratio) per segment, then merged with
-  ``sortWithinPartitions`` segment merges.
+  postings/partition, skew ratio) per segment, then merged by decoding
+  the segment blocks back to posting rows and re-running the same
+  sorted encode.
 """
 
 from __future__ import annotations
-
 
 import time
 from typing import Iterator, List, Optional, Tuple
@@ -66,6 +71,12 @@ POSTINGS_SCHEMA = (
 # extra binary columns per block — per-doc position counts + the
 # delta+varint position stream (codec.encode_positions)
 POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", pos_counts binary, positions binary"
+POSTINGS_COLS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
+POSITION_COLS = ["pos_counts", "positions"]
+
+# one row per (term, doc): the encoder's input and the merge's decode
+POSTING_ROWS_SCHEMA = "term string, salt int, doc_id long, tf int, doc_len int"
+POSTING_ROW_COLS = [f.split()[0] for f in POSTING_ROWS_SCHEMA.split(", ")]
 
 
 # ---------------------------------------------------------------------------
@@ -119,19 +130,6 @@ def _analyzed_schema(schema: T.StructType) -> T.StructType:
     return T.StructType.fromDDL(
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
         + ", " + _ANALYZED_EXTRA.replace("text_hash string, ", ""))
-
-
-def analyze_transcripts(df: DataFrame) -> DataFrame:
-    """Add text_hash/tokens/tfs/doc_len/first_pos to a transcript DF."""
-    if "text_hash" not in df.columns:
-        df = df.withColumn("text_hash", F.sha2(F.col("text"), 256))
-    out_schema = _analyzed_schema(df.schema)
-
-    def fn(batches):
-        for batch in batches:
-            yield _analyze_record_batch(batch)
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +296,10 @@ def _rank_batch(batch, pos, b_off, names):
     return pa.RecordBatch.from_arrays(arrays, names=names), pos + n
 
 
-def _make_rank_fn(b_off, out_schema, dedup_keys=None):
+def _make_rank_fn(b_off, out_schema, dedup_keys=None, then=None):
+    """The rank pass over ``_prepare_ranked``'s sorted partitions; with
+    ``then``, each ranked batch goes through it in the same Python
+    stage (one worker set, one Arrow round-trip)."""
     names = [f.name for f in out_schema]
     keys = list(dedup_keys) if dedup_keys else None
 
@@ -313,9 +314,39 @@ def _make_rank_fn(b_off, out_schema, dedup_keys=None):
             if batch.num_rows == 0:
                 continue
             out, pos = _rank_batch(batch, pos, b_off, names)
-            yield out
+            yield out if then is None else then(out)
 
     return rank_partition
+
+
+def rank_and_analyze(survivors: DataFrame, start_id: int,
+                     num_partitions: Optional[int] = None) -> DataFrame:
+    """Dense ids from ``start_id`` in ``(conv_id, turn_idx)`` order, then
+    tokenize — one fused Python stage. Rows equal on ``_DEDUP_KEYS``
+    keep one survivor. The result carries ``_konl_n_rows``,
+    ``_konl_max_id`` and ``_konl_n_dropped`` (no count job needed);
+    pass it to :func:`release` once its rows are written."""
+    ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
+        survivors, ("conv_id", "turn_idx"), num_partitions, start_id,
+        dedup_keys=_DEDUP_KEYS)
+    docs = ranged.mapInArrow(
+        _make_rank_fn(b_off, ids_schema, _DEDUP_KEYS,
+                      then=_analyze_record_batch),
+        _analyzed_schema(ids_schema))
+    docs._konl_persisted = ranged  # type: ignore[attr-defined]
+    docs._konl_b_off = b_off  # type: ignore[attr-defined]
+    docs._konl_n_rows = n_rows  # type: ignore[attr-defined]
+    docs._konl_max_id = start_id + n_rows - 1  # type: ignore[attr-defined]
+    docs._konl_n_dropped = n_dropped  # type: ignore[attr-defined]
+    return docs
+
+
+def release(docs: DataFrame) -> None:
+    """Unpersist the ranked intermediate behind a :func:`rank_and_analyze`
+    result and destroy its doc-id offset broadcast. The result's lineage
+    cannot run afterwards."""
+    docs._konl_persisted.unpersist()  # type: ignore[attr-defined]
+    docs._konl_b_off.destroy()  # type: ignore[attr-defined]
 
 
 # ---------------------------------------------------------------------------
@@ -345,7 +376,8 @@ def dup_winner_map(hashed: DataFrame, key, hash_col: str = "text_hash",
 
 def build_docs(transcripts: DataFrame,
                num_partitions: Optional[int] = None) -> Tuple[DataFrame, DataFrame]:
-    """Dedup + assign ids + analyze (one fused Python stage).
+    """Dedup + assign ids + analyze (one fused Python stage,
+    :func:`rank_and_analyze`).
 
     Returns ``(docs, losers)``: ``docs`` carries dense 1-based ``doc_id``
     over first-occurrence survivors; ``losers`` are the duplicate turns
@@ -386,26 +418,8 @@ def build_docs(transcripts: DataFrame,
     losers = (joined.filter(F.col("_wk").isNotNull() & (key != F.col("_wk")))
               .select("conv_id", "turn_idx", "text_hash"))
 
-    # fused id-assignment + tokenization: ONE Python stage (one worker
-    # set, one Arrow round-trip) instead of two chained map stages
-    ranged, b_off, ids_schema, n_dropped, n_rows = _prepare_ranked(
-        survivors, ("conv_id", "turn_idx"), num_partitions, 1,
-        dedup_keys=_DEDUP_KEYS)
-    names = [f.name for f in ids_schema]
-    out_schema = _analyzed_schema(ids_schema)
-    keys = list(_DEDUP_KEYS)
-
-    def fused(batches) -> Iterator:
-        pos, prev = None, None
-        for batch in batches:
-            batch, prev, _ = _dedup_carry_filter(batch, keys, prev)
-            if batch.num_rows == 0:
-                continue
-            with_id, pos = _rank_batch(batch, pos, b_off, names)
-            yield _analyze_record_batch(with_id)
-
-    docs = ranged.mapInArrow(fused, out_schema)
-    if n_dropped > 0:
+    docs = rank_and_analyze(survivors, 1, num_partitions)
+    if docs._konl_n_dropped > 0:  # type: ignore[attr-defined]
         # fully-identical duplicate rows were dropped in the ranked pass
         # — surface each dropped copy in the CONFLICT report (one narrow
         # aggregate, run only on degenerate inputs)
@@ -422,10 +436,7 @@ def build_docs(transcripts: DataFrame,
                      F.sequence(F.lit(2), F.col("_kc"))))
                  .select("conv_id", "turn_idx", "text_hash"))
         losers = losers.unionByName(extra)
-    docs._konl_persisted = ranged  # type: ignore[attr-defined]
     docs._konl_persisted2 = dup_winners  # type: ignore[attr-defined]
-    docs._konl_n_rows = n_rows  # type: ignore[attr-defined]
-    docs._konl_max_id = n_rows  # ids are dense 1..n_rows
     return docs, losers
 
 
@@ -496,6 +507,111 @@ def explode_postings_with_positions(docs: DataFrame) -> DataFrame:
                          "positions array<int>")
 
 
+def _group_starts(batch) -> np.ndarray:
+    """Row indices where ``(term, salt)`` changes, row 0 included."""
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    term = batch.column("term")
+    salt = batch.column("salt").to_numpy()
+    change = np.ones(n, dtype=bool)
+    if n > 1:
+        same = pc.equal(term.slice(1), term.slice(0, n - 1))
+        change[1:] = ~same.to_numpy(zero_copy_only=False) | (
+            salt[1:] != salt[:-1])
+    return np.flatnonzero(change)
+
+
+def _encode_runs(batch, group_starts: np.ndarray, avgdl: float,
+                 block_size: int, store_positions: bool):
+    """Encode whole ``(term, salt)`` runs of a sorted posting batch:
+    every ``block_size``-th row of a run starts a block, and each binary
+    column is varint-encoded for all blocks at once."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    ids = batch.column("doc_id").to_numpy()
+    tfs = batch.column("tf").to_numpy()
+    lens = batch.column("doc_len").to_numpy()
+    run_start = np.zeros(n, dtype=np.int64)
+    run_start[group_starts] = group_starts
+    rel = np.arange(n) - np.maximum.accumulate(run_start)
+    starts = np.flatnonzero(rel % block_size == 0)
+    ends = np.append(starts[1:], n)
+    w = _bm25_w(tfs, lens, avgdl)
+    arrays = [
+        batch.column("term").take(pa.array(starts)),
+        pa.array(batch.column("salt").to_numpy()[starts], pa.int32()),
+        pa.array((rel[starts] // block_size).astype(np.int32)),
+        pa.array((ends - starts).astype(np.int32)),
+        pa.array(ids[starts], pa.int64()),
+        pa.array(ids[ends - 1], pa.int64()),
+        codec.encode_doc_id_blocks(ids, starts),
+        codec.encode_varint_blocks(tfs, starts),
+        codec.encode_varint_blocks(lens, starts),
+        pa.array(np.maximum.reduceat(tfs, starts).astype(np.int32)),
+        pa.array(np.maximum.reduceat(w, starts)),
+    ]
+    if store_positions:
+        pos = batch.column("positions")
+        counts = pc.list_value_length(pos).fill_null(0).to_numpy()
+        flat = pc.list_flatten(pos).to_numpy(zero_copy_only=False)
+        arrays += codec.encode_positions_blocks(counts, flat, starts)
+    return pa.RecordBatch.from_arrays(
+        arrays, names=POSTINGS_COLS + (POSITION_COLS if store_positions
+                                       else []))
+
+
+def encode_postings(batches, avgdl: float, block_size: int,
+                    store_positions: bool = False) -> Iterator:
+    """Posting rows sorted by ``(term, salt, doc_id)`` → posting blocks.
+
+    Input batches carry ``term, salt, doc_id, tf, doc_len`` (plus
+    ``positions``, a list per row, when ``store_positions``); output
+    batches follow ``POSTINGS_SCHEMA`` (``POSTINGS_POS_SCHEMA``). One
+    numpy pass per batch: group and block boundaries from the sorted
+    keys, varint blocks through the ``codec`` ``*_blocks`` helpers,
+    ``block_max_tf`` / ``block_max_w`` from ``np.maximum.reduceat``.
+    The last ``(term, salt)`` run of a batch may continue in the next
+    one, so it is held back and encoded with that batch; salting caps a
+    run at ``target_per_split`` postings, which bounds the carry.
+    """
+    import pyarrow as pa
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if carry is not None:
+            batch = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([c, b])
+                 for c, b in zip(carry.columns, batch.columns)],
+                names=batch.schema.names)
+        group_starts = _group_starts(batch)
+        last = int(group_starts[-1])
+        if last:
+            yield _encode_runs(batch.slice(0, last), group_starts[:-1],
+                               avgdl, block_size, store_positions)
+        carry = batch.slice(last)
+    if carry is not None:
+        yield _encode_runs(carry, np.zeros(1, dtype=np.int64), avgdl,
+                           block_size, store_positions)
+
+
+def _encode_sorted(rows: DataFrame, avgdl: float, block_size: int,
+                   store_positions: bool) -> DataFrame:
+    """Posting rows → blocks: shuffle by ``(term, salt)``, JVM sort, then
+    :func:`encode_postings` as one ``mapInArrow`` stage."""
+    cols = POSTING_ROW_COLS + (["positions"] if store_positions else [])
+
+    def encode(batches):
+        return encode_postings(batches, avgdl, block_size, store_positions)
+
+    return (rows.select(*cols)
+            .repartition("term", "salt")
+            .sortWithinPartitions("term", "salt", "doc_id")
+            .mapInArrow(encode, POSTINGS_POS_SCHEMA if store_positions
+                        else POSTINGS_SCHEMA))
+
+
 def build_postings(docs: DataFrame, avgdl: float,
                    block_size: int = DEFAULT_BLOCK_SIZE,
                    target_per_split: int = DEFAULT_TARGET_POSTINGS_PER_SPLIT,
@@ -540,58 +656,19 @@ def build_postings(docs: DataFrame, avgdl: float,
         .drop("n_splits")
     )
 
-    def encode_group(key, pdf):
-        term, salt = key
-        pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        lens = pdf["doc_len"].to_numpy(dtype=np.int64)
-        pos_col = (pdf["positions"].to_numpy() if store_positions else None)
-        rows = []
-        for seq, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            b_ids, b_tfs, b_lens = ids[lo:hi], tfs[lo:hi], lens[lo:hi]
-            d, t, ln = codec.encode_block(b_ids, b_tfs, b_lens)
-            w = _bm25_w(b_tfs, b_lens, avgdl)
-            row = (term, int(salt), seq, int(hi - lo),
-                   int(b_ids[0]), int(b_ids[-1]), d, t, ln,
-                   int(b_tfs.max()), float(w.max()))
-            if store_positions:
-                row += codec.encode_positions(list(pos_col[lo:hi]))
-            rows.append(row)
-        cols = [
-            "term", "salt", "block_seq", "n", "first_doc_id", "last_doc_id",
-            "doc_ids_delta", "tfs", "doc_lens", "block_max_tf", "block_max_w",
-        ]
-        if store_positions:
-            cols += ["pos_counts", "positions"]
-        return pd.DataFrame(rows, columns=cols)
-
-    # NOTE (r3 measured): a one-shuffle variant — repartition the
-    # exploded rows by (term_bucket, salt) + JVM sort + streaming
-    # encode — was tried and REVERTED: (bucket, salt) has only
-    # ~n_buckets·avg_salts distinct keys, which caps encode parallelism
-    # and skews partitions (16c@4M: 44s → 52-68s). The two-shuffle
-    # shape keeps thousands of (term, salt) keys for the expensive
-    # encode stage; the second shuffle moves already-compressed blocks
-    # (tiny) purely for write co-location.
-    #
-    # NOTE (r9 measured, second rejected variant): a streaming
-    # mapInArrow encoder over repartition(term, salt) +
-    # sortWithinPartitions (no per-group pandas conversion, vectorized
-    # group-boundary detection) was built and A/B'd interleaved at 1M
-    # turns/32c. Isolated it is steadier (4.4s vs 3.8-8.3s) but in the
-    # full build its stage burns ~2x the JVM task CPU of
-    # FlatMapGroupsInPandas (~95 vs ~41 core-s), crowding out the
-    # concurrent token_dict/conflicts jobs: full-build postings phase
-    # 10.1-12.7s vs 5.5-12.1s for applyInPandas. The per-group
-    # overhead this would remove is small here (~7k groups — salt
-    # splitting keeps groups at ~block size), so applyInPandas stays.
+    # NOTE (measured on 4 cores, 20k-turn build, traced perfbench
+    # index_lifecycle): a groupBy(term, salt).applyInPandas encode —
+    # per-group pandas conversion, per-block Python loop — spent 5.9
+    # Python-s in a 2.3 s stage of 5 AQE tasks. This sorted mapInArrow
+    # encode spends 1.6 Python-s in a 0.6 s stage, and the postings +
+    # side-table phase fell 5.6 → 2.2 s. An earlier 32-core measurement
+    # had rejected a streaming encoder because its JVM sort crowded the
+    # concurrent side-table jobs; that does not show at 4 cores. The
+    # encode shuffles on (term, salt), not (term_bucket, salt): the
+    # latter has only ~n_buckets·avg_salts keys, which capped encode
+    # parallelism and skewed partitions (16c@4M: 44 s → 52-68 s).
     postings = (
-        salted.groupBy("term", "salt")
-        .applyInPandas(encode_group,
-                       POSTINGS_POS_SCHEMA if store_positions
-                       else POSTINGS_SCHEMA)
+        _encode_sorted(salted, avgdl, block_size, store_positions)
         .withColumn("term_bucket",
                     F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
         # co-locate on (bucket, salt) before the partitionBy write:
@@ -604,20 +681,39 @@ def build_postings(docs: DataFrame, avgdl: float,
     return postings
 
 
+def decompose_col(term):
+    """:func:`tokenizer.decompose` as a native Spark expression.
+
+    Each Hangul syllable (U+AC00..U+D7A3) becomes its choseong,
+    jungseong and (if any) jongseong compatibility jamo; every other
+    character passes through. The jamo tables are the tokenizer's."""
+    def table(chars):
+        return F.array(*[F.lit(c) for c in chars])
+
+    cho, jung, jong = (table(tk.CHOSEONG), table(tk.JUNGSEONG),
+                       table(tk.JONGSEONG))
+
+    def one(ch):
+        cp = F.ascii(ch)
+        i = cp - F.lit(tk._SYL_BASE)
+        return F.when(
+            cp.between(tk._SYL_BASE, tk._SYL_LAST),
+            F.concat(F.get(cho, F.floor(i / 588).cast("int")),
+                     F.get(jung, F.floor((i % 588) / 28).cast("int")),
+                     F.get(jong, (i % 28).cast("int")))).otherwise(ch)
+
+    return F.array_join(F.transform(F.split(term, ""), one), "")
+
+
 def build_token_dict(docs: Optional[DataFrame] = None,
                      term_df: Optional[DataFrame] = None) -> DataFrame:
     """term → (decomposed, df, term_bucket) — replaces the reference trie
     (``trie.py:139-154``): prefix search becomes a range predicate on the
     sorted ``decomposed`` column (SURVEY §2.4 Q6)."""
-
-    @F.pandas_udf(T.StringType())
-    def decompose_udf(s: pd.Series) -> pd.Series:
-        return s.map(tk.decompose)
-
     if term_df is None:
         term_df = (docs.select(F.explode("tokens").alias("term"))
                    .groupBy("term").agg(F.count("*").alias("df")))
-    return term_df.withColumn("decomposed", decompose_udf("term"))
+    return term_df.withColumn("decomposed", decompose_col(F.col("term")))
 
 
 # ---------------------------------------------------------------------------
@@ -691,6 +787,7 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
     obs = Observation("docs_stats")
     (docs_lazy.observe(obs, F.sum("doc_len").alias("total_doc_len"))
      .write.mode("overwrite").parquet(cat.table_path("docs")))
+    release(docs_lazy)  # ids are materialized in the docs table
     t = mark("tokenize_write_docs", t)
     docs = spark.read.parquet(cat.table_path("docs"))
 
@@ -769,10 +866,7 @@ def build_index(spark: SparkSession, transcripts: DataFrame, root: str,
         raise side_errs[0]
     t = mark("write_postings_and_side_tables", t)
     term_df.unpersist()
-    for attr in ("_konl_persisted", "_konl_persisted2"):
-        persisted = getattr(docs_lazy, attr, None)
-        if persisted is not None:
-            persisted.unpersist()
+    docs_lazy._konl_persisted2.unpersist()  # type: ignore[attr-defined]
     manifest = {
         "format_version": 1,
         "n_docs": n_docs,
@@ -857,57 +951,53 @@ def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
     return seg_dirs
 
 
+def _decode_blocks(batch, store_positions: bool):
+    """Posting blocks → posting rows (inverse of :func:`_encode_runs`)."""
+    import pyarrow as pa
+    n = batch.column("n").to_numpy().astype(np.int64)
+    rows = np.repeat(np.arange(batch.num_rows), n)
+    arrays = [
+        batch.column("term").take(pa.array(rows)),
+        pa.array(batch.column("salt").to_numpy()[rows], pa.int32()),
+        pa.array(codec.decode_doc_id_blocks(batch.column("doc_ids_delta"), n)),
+        pa.array(codec.decode_varint_blocks(batch.column("tfs"))
+                 .astype(np.int32)),
+        pa.array(codec.decode_varint_blocks(batch.column("doc_lens"))
+                 .astype(np.int32)),
+    ]
+    if store_positions:
+        counts, flat = codec.decode_positions_blocks(
+            batch.column("pos_counts"), batch.column("positions"))
+        offsets = np.zeros(counts.size + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        arrays.append(pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(flat.astype(np.int32))))
+    return pa.RecordBatch.from_arrays(
+        arrays, names=POSTING_ROW_COLS + (["positions"] if store_positions
+                                          else []))
+
+
 def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
                    avgdl: float, block_size: int, n_buckets: int,
                    store_positions: bool = False) -> None:
-    """B7: union segment posting blocks → repartition by (term, salt) →
-    sortWithinPartitions → decode-concat-re-encode into final blocks.
+    """B7: union segment posting blocks → decode to posting rows → the
+    same sorted encode as :func:`build_postings`.
 
-    Segments hold disjoint doc-id ranges, so concatenating their decoded
-    arrays in ``first_doc_id`` order is already globally sorted per term.
-    Positional segments re-encode the per-doc position lists alongside.
+    Segments share the global salting (one ``term_df``), so a
+    ``(term, salt)`` run re-forms from its segments' blocks; the encode
+    re-blocks it in doc-id order, positions included.
     """
-    union = spark.read.parquet(*seg_dirs)
+    cols = POSTINGS_COLS + (POSITION_COLS if store_positions else [])
 
-    def merge_group(key, pdf):
-        term, salt = key
-        pdf = pdf.sort_values("first_doc_id")
-        ids = np.concatenate([codec.decode_doc_ids(b) for b in pdf["doc_ids_delta"]])
-        tfs = np.concatenate([codec.decode_varint(b).astype(np.int64)
-                              for b in pdf["tfs"]])
-        lens = np.concatenate([codec.decode_varint(b).astype(np.int64)
-                               for b in pdf["doc_lens"]])
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, lens = ids[order], tfs[order], lens[order]
-        if store_positions:
-            pos_all = [p for c, v in zip(pdf["pos_counts"], pdf["positions"])
-                       for p in codec.decode_positions(c, v)]
-            pos_all = [pos_all[i] for i in order]
-        rows = []
-        for seq, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            d, t, ln = codec.encode_block(ids[lo:hi], tfs[lo:hi], lens[lo:hi])
-            w = _bm25_w(tfs[lo:hi], lens[lo:hi], avgdl)
-            row = (term, int(salt), seq, int(hi - lo),
-                   int(ids[lo]), int(ids[hi - 1]), d, t, ln,
-                   int(tfs[lo:hi].max()), float(w.max()))
-            if store_positions:
-                row += codec.encode_positions(pos_all[lo:hi])
-            rows.append(row)
-        cols = [
-            "term", "salt", "block_seq", "n", "first_doc_id", "last_doc_id",
-            "doc_ids_delta", "tfs", "doc_lens", "block_max_tf", "block_max_w",
-        ]
-        if store_positions:
-            cols += ["pos_counts", "positions"]
-        return pd.DataFrame(rows, columns=cols)
+    def decode(batches):
+        for batch in batches:
+            yield _decode_blocks(batch, store_positions)
 
+    rows = spark.read.parquet(*seg_dirs).select(*cols).mapInArrow(
+        decode, POSTING_ROWS_SCHEMA
+        + (", positions array<int>" if store_positions else ""))
     merged = (
-        union.repartition("term", "salt")
-        .groupBy("term", "salt")
-        .applyInPandas(merge_group,
-                       POSTINGS_POS_SCHEMA if store_positions
-                       else POSTINGS_SCHEMA)
+        _encode_sorted(rows, avgdl, block_size, store_positions)
         .withColumn("term_bucket",
                     F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
     )

@@ -31,7 +31,7 @@ import time
 from typing import Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import build as B
@@ -97,28 +97,25 @@ def append_batch(spark: SparkSession, root: str,
                                 F.col("doc_id").alias("conflict_doc_id"))
     survivors = firsts.join(existing.select("text_hash"), "text_hash",
                             "left_anti")
-    # dedup_keys: fully-identical duplicate rows (same key AND text)
-    # keep exactly one survivor — same guarantee as the full build
-    new_ids = B.assign_doc_ids(
-        survivors, start_id=int(manifest["max_doc_id"]) + 1,
-        dedup_keys=B._DEDUP_KEYS)
-    new_docs = B.analyze_transcripts(new_ids) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-    stats = new_docs.agg(
-        F.count("*").alias("n"), F.sum("doc_len").alias("sum_len"),
-        F.max("doc_id").alias("max_id")).collect()[0]
-    n_new = int(stats["n"])
+    # ids from max_doc_id + 1; fully-identical duplicate rows (same key
+    # AND text) keep exactly one survivor — same fused rank+tokenize
+    # stage as the full build, and the ranked count gives n_new
+    start_id = int(manifest["max_doc_id"]) + 1
+    new_lazy = B.rank_and_analyze(survivors, start_id)
+    n_new = int(new_lazy._konl_n_rows)
     if n_new == 0:
         hash_agg.unpersist()
-        new_docs.unpersist()
-        ranged = getattr(new_ids, "_konl_persisted", None)
-        if ranged is not None:
-            ranged.unpersist()
+        B.release(new_lazy)
         return {"indexed": 0, "conflicts": rows_in, "first_doc_id": None}
 
+    # Σ doc_len rides the docs write (as in build_index); everything
+    # downstream re-reads the written part
     docs_path = f"docs_parts/{part}"
-    new_docs.write.mode("overwrite").parquet(cat.table_path(docs_path))
+    obs = Observation("append_stats")
+    (new_lazy.observe(obs, F.sum("doc_len").alias("sum_len"))
+     .write.mode("overwrite").parquet(cat.table_path(docs_path)))
+    B.release(new_lazy)
+    new_docs = spark.read.parquet(cat.table_path(docs_path))
 
     postings = B.build_postings(
         new_docs, avgdl=float(manifest["avgdl_built"]),
@@ -154,7 +151,7 @@ def append_batch(spark: SparkSession, root: str,
                 .groupBy("conv_id", "turn_idx")
                 .agg(F.min("conflict_doc_id").alias("conflict_doc_id")))
     conflicts = vs_existing.unionByName(in_batch)
-    n_dropped = int(getattr(new_ids, "_konl_n_dropped", 0) or 0)
+    n_dropped = int(new_lazy._konl_n_dropped)
     if n_dropped > 0:
         # fully-identical duplicate rows (same key AND text) dropped by
         # the ranked pass pass the winner-key filter, so they appeared
@@ -194,9 +191,9 @@ def append_batch(spark: SparkSession, root: str,
     manifest["total_doc_len"] = (
         manifest.get("total_doc_len",
                      float(manifest["avgdl"]) * (manifest["n_docs"] - n_new))
-        + float(stats["sum_len"]))
+        + float(obs.get["sum_len"] or 0.0))
     manifest["avgdl"] = manifest["total_doc_len"] / manifest["n_docs"]
-    manifest["max_doc_id"] = int(stats["max_id"])
+    manifest["max_doc_id"] = start_id + n_new - 1
     manifest["next_part"] = int(manifest.get("next_part", 1)) + 1
     cat.commit_manifest(manifest)
     cat.commit_segment(part, {
@@ -206,13 +203,8 @@ def append_batch(spark: SparkSession, root: str,
         "metrics": {"elapsed_sec": None},
     })
     hash_agg.unpersist()
-    new_docs.unpersist()
-    ranged = getattr(new_ids, "_konl_persisted", None)
-    if ranged is not None:  # assign_doc_ids' range-partitioned intermediate
-        ranged.unpersist()
-    first_id = int(manifest["max_doc_id"]) - n_new + 1
     return {"indexed": n_new, "conflicts": n_conflicts,
-            "first_doc_id": first_id}
+            "first_doc_id": start_id}
 
 
 def delete_docs(spark: SparkSession, root: str,
@@ -295,8 +287,10 @@ def compact(spark: SparkSession, root: str) -> dict:
     docs_path = f"docs_v{v}"
     live.write.mode("overwrite").parquet(cat.table_path(docs_path))
 
+    # term_df feeds both the salting decision and the token_dict
     exploded = B.explode_postings(live)
-    term_df = exploded.groupBy("term").agg(F.count("*").alias("df"))
+    term_df = (exploded.groupBy("term").agg(F.count("*").alias("df"))
+               .persist(StorageLevel.MEMORY_AND_DISK))
     postings = B.build_postings(
         live, avgdl, block_size=int(manifest["block_size"]),
         n_buckets=n_buckets, exploded=exploded, term_df=term_df,
@@ -311,6 +305,7 @@ def compact(spark: SparkSession, root: str) -> dict:
     (td.repartitionByRange(max(1, n_buckets // 4), "decomposed")
        .sortWithinPartitions("decomposed")
        .write.mode("overwrite").parquet(cat.table_path(td_path)))
+    term_df.unpersist()
     live.unpersist()
 
     manifest["tables"] = {"docs": [docs_path], "postings": [post_path],

@@ -316,7 +316,8 @@ def test_lean_decode_matches_full_decode(zeng):
     paths can never drift — the AND count relies on one row per
     (term, doc_id) in BOTH."""
     meta = zeng._term_meta([t for t in zeng.token_dict
-                            .select("term").limit(3).toPandas()["term"]])
+                            .select("term").orderBy("term").limit(3)
+                            .toPandas()["term"]])
     blocks = zeng._blocks_for(meta)
     lean = sorted(r["doc_id"] for r in zeng._decode_ids(blocks).collect())
     full = sorted(r["doc_id"] for r in zeng._decode(blocks)

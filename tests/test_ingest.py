@@ -134,3 +134,27 @@ def test_append_is_invisible_without_commit(spark, fresh_index, monkeypatch):
     eng = SearchEngine(spark, root)
     assert eng.n_docs == 132
     assert eng.search(["새문서"], "or", log=False).collect() == []
+
+
+def test_write_calls_leave_no_persisted_rdds(spark, tmp_path):
+    """Every write call unpersists what it persisted: the ranked docs
+    and dedup maps (build, append), the victims (delete) and the live
+    docs and term_df (compact)."""
+    root = str(tmp_path / "idx")
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    calls = [
+        ("build_index", lambda: build.build_index(
+            spark, corpus.spark_transcripts(
+                spark, corpus.make_title_transcripts()), root)),
+        ("append_batch", lambda: ingest.append_batch(spark, root, _batch_df(
+            spark, [TITLES[9], "완전히 새로운 문서", "완전히 새로운 문서"]))),
+        ("delete_docs", lambda: ingest.delete_docs(spark, root, [3, 133])),
+        ("compact", lambda: ingest.compact(spark, root)),
+    ]
+    for name, call in calls:
+        before = n_persisted()
+        call()
+        assert n_persisted() == before, name

@@ -1,6 +1,9 @@
 """Unit tests for the shared tokenizer (reference contract:
 /root/reference/konlsearch/index.py:98-127, trie.py:29-30)."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from konlspark import tokenizer as tk
 
 
@@ -73,3 +76,26 @@ def test_analyze_tf_and_doclen():
 
 def test_first_positions_absent_is_none():
     assert tk.first_positions(["a", "b", "a"], ["a", "b", "z"]) == [0, 1, None]
+
+
+_MIXED_TEXT = st.text(alphabet=st.one_of(
+    st.characters(min_codepoint=0xAC00, max_codepoint=0xD7A3),  # syllables
+    st.sampled_from([chr(0xABFF), chr(0xD7A4)]),  # just outside the block
+    st.characters(min_codepoint=0x3131, max_codepoint=0x318E),  # compat jamo
+    st.characters(min_codepoint=0x20, max_codepoint=0x7E),  # ASCII
+    st.characters(min_codepoint=0x4E00, max_codepoint=0x9FFF),  # CJK
+    st.characters(min_codepoint=0x10000, max_codepoint=0x10FFFF),
+), max_size=12)
+
+
+@given(st.lists(_MIXED_TEXT, min_size=1, max_size=40))
+@settings(max_examples=25, deadline=None)
+def test_native_decompose_matches_python(spark, texts):
+    """The token_dict's Spark-expression decompose == tk.decompose."""
+    from pyspark.sql import functions as F
+
+    from konlspark.build import decompose_col
+    df = spark.createDataFrame([(t,) for t in texts + [""]], "t string")
+    got = [r["d"] for r in
+           df.select(decompose_col(F.col("t")).alias("d")).collect()]
+    assert got == [tk.decompose(t) for t in texts + [""]]
