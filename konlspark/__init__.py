@@ -9,3 +9,7 @@ operators (dedup, similarity, text analysis) in :mod:`konlspark.ops`.
 """
 
 __version__ = "0.1.0"
+
+from . import _pyworker
+
+_pyworker.install()

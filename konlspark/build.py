@@ -444,14 +444,6 @@ def build_docs(transcripts: DataFrame,
 # Posting build (B3) — salted skew-split + block encoding
 # ---------------------------------------------------------------------------
 
-def _bm25_w(tfs: np.ndarray, doc_lens: np.ndarray, avgdl: float) -> np.ndarray:
-    """idf-less BM25 term weight (idf applied at query time from df)."""
-    tfs = tfs.astype(np.float64)
-    return (tfs * (BM25_K1 + 1.0)) / (
-        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * doc_lens.astype(np.float64) / avgdl)
-    )
-
-
 def explode_postings(docs: DataFrame) -> DataFrame:
     """docs → (term, doc_id, tf, doc_len) rows."""
     return (
@@ -537,7 +529,7 @@ def _encode_runs(batch, group_starts: np.ndarray, avgdl: float,
     rel = np.arange(n) - np.maximum.accumulate(run_start)
     starts = np.flatnonzero(rel % block_size == 0)
     ends = np.append(starts[1:], n)
-    w = _bm25_w(tfs, lens, avgdl)
+    w = codec.bm25_weight(tfs, lens, avgdl)
     arrays = [
         batch.column("term").take(pa.array(starts)),
         pa.array(batch.column("salt").to_numpy()[starts], pa.int32()),
@@ -951,32 +943,6 @@ def _build_segments(spark, cat: IndexCatalog, docs: DataFrame, avgdl: float,
     return seg_dirs
 
 
-def _decode_blocks(batch, store_positions: bool):
-    """Posting blocks → posting rows (inverse of :func:`_encode_runs`)."""
-    import pyarrow as pa
-    n = batch.column("n").to_numpy().astype(np.int64)
-    rows = np.repeat(np.arange(batch.num_rows), n)
-    arrays = [
-        batch.column("term").take(pa.array(rows)),
-        pa.array(batch.column("salt").to_numpy()[rows], pa.int32()),
-        pa.array(codec.decode_doc_id_blocks(batch.column("doc_ids_delta"), n)),
-        pa.array(codec.decode_varint_blocks(batch.column("tfs"))
-                 .astype(np.int32)),
-        pa.array(codec.decode_varint_blocks(batch.column("doc_lens"))
-                 .astype(np.int32)),
-    ]
-    if store_positions:
-        counts, flat = codec.decode_positions_blocks(
-            batch.column("pos_counts"), batch.column("positions"))
-        offsets = np.zeros(counts.size + 1, dtype=np.int32)
-        np.cumsum(counts, out=offsets[1:])
-        arrays.append(pa.ListArray.from_arrays(
-            pa.array(offsets), pa.array(flat.astype(np.int32))))
-    return pa.RecordBatch.from_arrays(
-        arrays, names=POSTING_ROW_COLS + (["positions"] if store_positions
-                                          else []))
-
-
 def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
                    avgdl: float, block_size: int, n_buckets: int,
                    store_positions: bool = False) -> None:
@@ -991,7 +957,7 @@ def merge_segments(spark: SparkSession, seg_dirs: List[str], out_path: str,
 
     def decode(batches):
         for batch in batches:
-            yield _decode_blocks(batch, store_positions)
+            yield codec.decode_blocks(batch)
 
     rows = spark.read.parquet(*seg_dirs).select(*cols).mapInArrow(
         decode, POSTING_ROWS_SCHEMA

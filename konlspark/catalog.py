@@ -35,12 +35,14 @@ class IndexCatalog:
 
     ALL catalog metadata I/O (manifest, segment checkpoints, sequence
     markers) goes through the LOCAL filesystem — the embedded
-    single-process model the reference uses (RocksDB on a local path).
-    A non-local root (``hdfs://``, ``s3://``…) fails LOUDLY at
-    construction instead of silently returning empty metadata: cluster
-    deployments swap exactly this layer (an Iceberg/HMS catalog or a
-    Hadoop-FileSystem port of these few methods); the table data itself
-    is already read/written through Spark and needs no change.
+    single-process model the reference uses (RocksDB on a local path) —
+    and so do the driver-side table appends of :meth:`append_rows` (the
+    per-query log rows). A non-local root (``hdfs://``, ``s3://``…)
+    fails LOUDLY at construction instead of silently returning empty
+    metadata: cluster deployments swap exactly this layer (an
+    Iceberg/HMS catalog or a Hadoop-FileSystem port of these few
+    methods); every other table read and write goes through Spark and
+    needs no change.
     """
 
     def __init__(self, root: str):
@@ -126,6 +128,22 @@ class IndexCatalog:
         d = self._marker_dir(table)
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, f"{new_last:020d}"), "w").close()
+
+    # driver-side table appends ---------------------------------------------
+    def append_rows(self, table: str, rows) -> None:
+        """Add a few rows (a ``pyarrow.Table``) to ``table`` as one new
+        parquet file written by this process — no Spark job. The file is
+        written under a dot-name, which Spark's file index skips, then
+        renamed, so a reader never sees it half-written."""
+        import uuid
+
+        import pyarrow.parquet as pq
+        d = self.table_path(table)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}-driver.parquet"
+        tmp = os.path.join(d, "." + name)
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(d, name))
 
 
 # ---------------------------------------------------------------------------

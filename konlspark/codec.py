@@ -10,14 +10,18 @@ encoded into ``binary`` columns, 128 postings per block by default.
 Everything here is pure numpy (no Python-per-posting loops — at most 10
 vectorized rounds per encode/decode regardless of block size). The
 ``*_blocks`` forms encode or decode every block of an Arrow batch in one
-such pass; they are what the build's ``mapInArrow`` encoder runs.
+such pass; they are what the build's ``mapInArrow`` encoder runs, and
+:func:`decode_blocks` is the one block → posting-row decode that the
+merge and every query path run.
 """
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import Dict, Optional, Tuple
 
 import numpy as np
+
+from .oracle import BM25_B, BM25_K1
 
 BLOCK_SIZE = 128
 
@@ -235,3 +239,63 @@ def decode_positions_blocks(counts_arr, pos_arr):
     counts = decode_varint_blocks(counts_arr).astype(np.int64)
     deltas = decode_varint_blocks(pos_arr).astype(np.int64)
     return counts, _segment_cumsum(deltas, counts)
+
+
+def bm25_weight(tfs: np.ndarray, doc_lens: np.ndarray,
+                avgdl: float) -> np.ndarray:
+    """idf-less BM25 term weight (idf applied at query time from df)."""
+    tfs = tfs.astype(np.float64)
+    return (tfs * (BM25_K1 + 1.0)) / (
+        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * doc_lens.astype(np.float64) / avgdl)
+    )
+
+
+def decode_blocks(batch, avgdl: Optional[float] = None,
+                  idf: Optional[Dict[str, float]] = None):
+    """Posting blocks → posting rows: one vectorised pass over a whole
+    Arrow batch (the inverse of the build's encoder).
+
+    ``batch`` carries ``n`` (postings per block) plus any of the block
+    columns, decoded in this output order: ``term`` and ``salt``
+    repeated per posting, ``doc_ids_delta`` → ``doc_id``, ``tfs`` →
+    ``tf``, ``doc_lens`` → ``doc_len``, ``pos_counts`` + ``positions``
+    → ``positions`` (``list<int32>``). With ``avgdl`` (which needs
+    ``term``, ``tfs`` and ``doc_lens``) a ``score`` column follows:
+    ``idf[term] · bm25_weight(tf, doc_len, avgdl)``, 0 for a term
+    missing from ``idf``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    cols = batch.schema.names
+    out = {}
+    n = batch.column("n").to_numpy().astype(np.int64)
+    rows = np.repeat(np.arange(batch.num_rows), n)
+    if "term" in cols:
+        out["term"] = batch.column("term").take(pa.array(rows))
+    if "salt" in cols:
+        out["salt"] = pa.array(batch.column("salt").to_numpy()[rows],
+                               pa.int32())
+    if "doc_ids_delta" in cols:
+        out["doc_id"] = pa.array(
+            decode_doc_id_blocks(batch.column("doc_ids_delta"), n))
+    if "tfs" in cols:
+        tf = decode_varint_blocks(batch.column("tfs")).astype(np.int32)
+        out["tf"] = pa.array(tf)
+    if "doc_lens" in cols:
+        dl = decode_varint_blocks(batch.column("doc_lens")).astype(np.int32)
+        out["doc_len"] = pa.array(dl)
+    if "pos_counts" in cols:
+        counts, flat = decode_positions_blocks(
+            batch.column("pos_counts"), batch.column("positions"))
+        offsets = np.zeros(counts.size + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        out["positions"] = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(flat.astype(np.int32)))
+    if avgdl is not None:
+        idf = idf or {}
+        vals = np.append(np.fromiter(idf.values(), dtype=np.float64,
+                                     count=len(idf)), 0.0)
+        hit = pc.index_in(batch.column("term"),
+                          value_set=pa.array(list(idf), pa.string()))
+        idf_block = vals[hit.fill_null(len(idf)).to_numpy()]
+        out["score"] = pa.array(bm25_weight(tf, dl, avgdl) * idf_block[rows])
+    return pa.RecordBatch.from_arrays(list(out.values()), names=list(out))

@@ -288,6 +288,33 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 SIMHASH_BITS = 60  # 15 hex chars of md5 → 60-bit non-negative int64
 
 
+def _simhash_vote(batches):
+    """The per-bit majority vote of :func:`simhash_signatures`, one
+    vectorised pass per chunk of an Arrow batch (module level, so the
+    stage function is a konlspark global)."""
+    import numpy as np
+    import pandas as pd
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        # chunk so the (hashes x 60) sign matrix stays ~tens of MB
+        for lo in range(0, len(pdf), 4096):
+            sub = pdf.iloc[lo:lo + 4096]
+            runs = [np.asarray(h, dtype=np.int64) for h in sub["hs"]]
+            lens = np.fromiter((len(r) for r in runs), dtype=np.int64,
+                               count=len(runs))
+            flat = np.concatenate(runs)
+            signs = (((flat[:, None] >> bit_idx) & 1) * 2 - 1).astype(
+                np.int32)
+            offsets = np.zeros(len(runs), dtype=np.int64)
+            np.cumsum(lens[:-1], out=offsets[1:])
+            votes = np.add.reduceat(signs, offsets, axis=0)
+            sims = ((votes > 0).astype(np.int64) << bit_idx).sum(axis=1)
+            yield pd.DataFrame({"id": sub["id"].to_numpy(),
+                                "simhash": sims})
+
+
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 2) -> DataFrame:
     """60-bit SimHash per doc: majority vote per bit over the md5-based
@@ -302,37 +329,12 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     per-doc ``applyInPandas`` pays one Python call per doc; this is one
     narrow map stage end to end.
     """
-    import numpy as np
-    import pandas as pd
-
     base = (_shingle_df(df, text_col, id_col, n)
             .select("id", F.transform(
                 "sh",
                 lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
                 .cast("long")).alias("hs")))
-    bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
-
-    def vote(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # chunk so the (hashes x 60) sign matrix stays ~tens of MB
-            for lo in range(0, len(pdf), 4096):
-                sub = pdf.iloc[lo:lo + 4096]
-                runs = [np.asarray(h, dtype=np.int64) for h in sub["hs"]]
-                lens = np.fromiter((len(r) for r in runs), dtype=np.int64,
-                                   count=len(runs))
-                flat = np.concatenate(runs)
-                signs = (((flat[:, None] >> bit_idx) & 1) * 2 - 1).astype(
-                    np.int32)
-                offsets = np.zeros(len(runs), dtype=np.int64)
-                np.cumsum(lens[:-1], out=offsets[1:])
-                votes = np.add.reduceat(signs, offsets, axis=0)
-                sims = ((votes > 0).astype(np.int64) << bit_idx).sum(axis=1)
-                yield pd.DataFrame({"id": sub["id"].to_numpy(),
-                                    "simhash": sims})
-
-    return base.mapInPandas(vote, "id long, simhash long")
+    return base.mapInPandas(_simhash_vote, "id long, simhash long")
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",

@@ -9,7 +9,8 @@ plans:
 - ``postings`` scan filters ``term_bucket IN (...) AND term IN (...)``
   → directory-level partition pruning + row-group stats pruning; only
   buckets holding query terms are touched;
-- block decode is one Arrow ``mapInPandas`` (numpy varint decode);
+- block decode is one ``mapInArrow`` over ``codec.decode_blocks``, the
+  whole-batch numpy varint decode the segment merge also runs;
 - AND/OR fold = groupBy(doc_id) count vs distinct (reference
   ``inverted_index.py:98-116``), PHRASE = AND + first-occurrence
   monotonicity over ``docs.first_pos`` (reference ``index.py:432-448``),
@@ -31,17 +32,18 @@ from __future__ import annotations
 
 
 from dataclasses import dataclass
-from typing import Dict, Iterator, List, Optional, Sequence, Union
+from typing import Dict, List, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec
 from . import tokenizer as tk
 from .catalog import IndexCatalog
-from .oracle import BM25_B, BM25_K1, bm25_idf
+from .oracle import bm25_idf
 
 
 @dataclass
@@ -168,98 +170,51 @@ class SearchEngine:
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def _decode(self, blocks: DataFrame, idf: Optional[Dict[str, float]] = None
-                ) -> DataFrame:
-        """blocks → (term, doc_id, tf, score) rows; score = idf * w."""
-        avgdl = self.avgdl
-        idf = idf or {}
+    # Spark types of the posting-row columns the decodes return
+    _ROW_TYPES = {"term": "string", "doc_id": "long", "tf": "int",
+                  "score": "double", "positions": "array<int>"}
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                terms, ids_l, tfs_l, scores_l = [], [], [], []
-                for row in pdf.itertuples(index=False):
-                    ids, tfs, lens = codec.decode_block(
-                        row.doc_ids_delta, row.tfs, row.doc_lens)
-                    w = (tfs * (BM25_K1 + 1.0)) / (
-                        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * lens / avgdl))
-                    terms.append(np.full(len(ids), row.term, dtype=object))
-                    ids_l.append(ids)
-                    tfs_l.append(tfs)
-                    scores_l.append(w * idf.get(row.term, 0.0))
-                if not ids_l:
-                    yield pd.DataFrame({"term": [], "doc_id": [], "tf": [],
-                                        "score": []}).astype(
-                        {"doc_id": "int64", "tf": "int64", "score": "float64"})
-                    continue
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(ids_l),
-                    "tf": np.concatenate(tfs_l),
-                    "score": np.concatenate(scores_l),
-                })
+    def _decode_rows(self, blocks: DataFrame, block_cols: List[str],
+                     row_cols: List[str],
+                     idf: Optional[Dict[str, float]] = None) -> DataFrame:
+        """blocks → posting rows through one ``mapInArrow`` over
+        :func:`codec.decode_blocks` (the merge's decode loop), minus
+        tombstoned docs. Only ``block_cols`` cross into Python, so column
+        pruning drops the rest from the parquet scan."""
+        avgdl = self.avgdl if "score" in row_cols else None
 
-        cols = ["term", "doc_ids_delta", "tfs", "doc_lens"]
-        out = blocks.select(*cols).mapInPandas(
-            fn, "term string, doc_id long, tf long, score double")
+        def fn(batches):
+            for batch in batches:
+                yield codec.decode_blocks(batch, avgdl, idf).select(row_cols)
+
+        out = blocks.select(*block_cols).mapInArrow(fn, ", ".join(
+            f"{c} {self._ROW_TYPES[c]}" for c in row_cols))
         if self.tombstones is not None:
             out = out.join(self.tombstones, "doc_id", "left_anti")
         return out
+
+    def _decode(self, blocks: DataFrame, idf: Optional[Dict[str, float]] = None
+                ) -> DataFrame:
+        """blocks → (term, doc_id, tf, score) rows; score = idf * w."""
+        return self._decode_rows(
+            blocks, ["term", "n", "doc_ids_delta", "tfs", "doc_lens"],
+            ["term", "doc_id", "tf", "score"], idf)
 
     def _decode_ids(self, blocks: DataFrame) -> DataFrame:
         """blocks → bare ``doc_id`` posting rows, one per (term, doc_id).
 
-        Boolean search never reads tf/score/term, so this path ships only
-        the 8-byte id across the Python boundary and — because the opaque
-        ``mapInPandas`` input is pre-projected to ``doc_ids_delta`` alone —
-        column pruning drops ``tfs``/``doc_lens`` from the parquet scan
-        entirely (guide §4.1: pass only the columns the function needs).
-        Skips two varint decodes, the BM25 weight math, and the per-posting
-        object-string term array the full decode materializes.
-        """
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids_l = [codec.decode_doc_ids(b)
-                         for b in pdf["doc_ids_delta"]]
-                yield pd.DataFrame({
-                    "doc_id": (np.concatenate(ids_l) if ids_l
-                               else np.empty(0, dtype=np.int64)),
-                })
-
-        out = blocks.select("doc_ids_delta").mapInPandas(fn, "doc_id long")
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
-        return out
+        Boolean search never reads tf/score/term, so only ``n`` and
+        ``doc_ids_delta`` are scanned and shipped to Python: no
+        ``tfs``/``doc_lens`` read, two varint decodes, the BM25 weight
+        math and the per-posting term column skipped."""
+        return self._decode_rows(blocks, ["n", "doc_ids_delta"], ["doc_id"])
 
     def _decode_positions(self, blocks: DataFrame) -> DataFrame:
         """blocks → (term, doc_id, positions array<int>) rows — only
         meaningful on an index built with ``store_positions=True``."""
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                terms, ids_l, pos_l = [], [], []
-                for row in pdf.itertuples(index=False):
-                    ids = codec.decode_doc_ids(row.doc_ids_delta)
-                    pos = codec.decode_positions(row.pos_counts,
-                                                 row.positions)
-                    terms.append(np.full(len(ids), row.term, dtype=object))
-                    ids_l.append(ids)
-                    pos_l.extend([p.astype(np.int32) for p in pos])
-                if not ids_l:
-                    yield pd.DataFrame({"term": pd.Series([], dtype=object),
-                                        "doc_id": pd.Series([], dtype="int64"),
-                                        "positions": []})
-                    continue
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(ids_l),
-                    "positions": pos_l,
-                })
-
-        cols = ["term", "doc_ids_delta", "pos_counts", "positions"]
-        out = blocks.select(*cols).mapInPandas(
-            fn, "term string, doc_id long, positions array<int>")
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
-        return out
+        return self._decode_rows(
+            blocks, ["term", "n", "doc_ids_delta", "pos_counts", "positions"],
+            ["term", "doc_id", "positions"])
 
     def _postings_df(self, terms: Sequence[str],
                      with_scores: bool = False) -> DataFrame:
@@ -1067,11 +1022,11 @@ class SearchEngine:
         collect the essential partial scores — bounded by
         ``MAXSCORE_DRIVER_CANDIDATES`` rows, a few MB — broadcast the
         SORTED candidate-id array, and prune INSIDE the decode stage:
-        one ``searchsorted`` per block skips non-overlapping blocks
-        before any varint work, and membership filtering trims decoded
-        rows to candidates. Total cost: the stats job + the (tiny)
-        essential decode + ONE scoring job — no extra shuffles, joins
-        or broadcasts of DataFrames."""
+        one vectorised ``searchsorted`` over each batch's block ranges
+        skips non-overlapping blocks before any varint work, and
+        membership filtering trims decoded rows to candidates. Total
+        cost: the stats job + the (tiny) essential decode + ONE scoring
+        job — no extra shuffles, joins or broadcasts of DataFrames."""
         pdf = (self._decode(self._blocks_for({t: meta[t] for t in E}), idf)
                .groupBy("doc_id").agg(F.sum("score").alias("score"))
                .toPandas())
@@ -1086,39 +1041,28 @@ class SearchEngine:
         avgdl = self.avgdl
         blocks_ne = self._blocks_for({t: meta[t] for t in NE})
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def fn(batches):
             ids_sorted = b_cand.value
-            n_c = len(ids_sorted)
-            for bdf in batches:
-                ids_l, scores_l = [], []
-                for row in bdf.itertuples(index=False):
-                    # block-level skip: any candidate in [first, last]?
-                    i = np.searchsorted(ids_sorted, row.first_doc_id)
-                    if i >= n_c or ids_sorted[i] > row.last_doc_id:
-                        continue
-                    ids, tfs, lens = codec.decode_block(
-                        row.doc_ids_delta, row.tfs, row.doc_lens)
-                    pos = np.searchsorted(ids_sorted, ids)
-                    pos[pos >= n_c] = n_c - 1
-                    member = ids_sorted[pos] == ids
-                    if not member.any():
-                        continue
-                    ids, tfs, lens = ids[member], tfs[member], lens[member]
-                    w = (tfs * (BM25_K1 + 1.0)) / (
-                        tfs + BM25_K1 * (1.0 - BM25_B
-                                         + BM25_B * lens / avgdl))
-                    ids_l.append(ids)
-                    scores_l.append(w * idf.get(row.term, 0.0))
-                if not ids_l:
-                    yield pd.DataFrame({"doc_id": [], "score": []}).astype(
-                        {"doc_id": "int64", "score": "float64"})
-                    continue
-                yield pd.DataFrame({"doc_id": np.concatenate(ids_l),
-                                    "score": np.concatenate(scores_l)})
+            last = len(ids_sorted) - 1
+            for batch in batches:
+                # block-level skip before any varint work: keep a block
+                # iff a candidate falls in [first_doc_id, last_doc_id]
+                i = np.searchsorted(ids_sorted,
+                                    batch.column("first_doc_id").to_numpy())
+                keep = (i <= last) & (ids_sorted[np.minimum(i, last)]
+                                      <= batch.column("last_doc_id")
+                                      .to_numpy())
+                rows = codec.decode_blocks(batch.filter(pa.array(keep)),
+                                           avgdl, idf)
+                ids = rows.column("doc_id").to_numpy()
+                member = ids_sorted[np.minimum(
+                    np.searchsorted(ids_sorted, ids), last)] == ids
+                yield rows.select(["doc_id", "score"]).filter(
+                    pa.array(member))
 
-        cols = ["term", "first_doc_id", "last_doc_id",
+        cols = ["term", "n", "first_doc_id", "last_doc_id",
                 "doc_ids_delta", "tfs", "doc_lens"]
-        ne_scores = blocks_ne.select(*cols).mapInPandas(
+        ne_scores = blocks_ne.select(*cols).mapInArrow(
             fn, "doc_id long, score double")
         part_df = self.spark.createDataFrame(
             pdf, "doc_id long, score double")
@@ -1287,11 +1231,13 @@ class SearchEngine:
     #
     # Hot-read-path design: logging a search must NOT touch the manifest
     # (a read-modify-write per query serializes readers and doubles the
-    # filesystem commits). The log is append-only parquet; the sequence
+    # filesystem commits). The log is append-only parquet: a logged
+    # search writes its few rows as one file from the driver
+    # (``IndexCatalog.append_rows`` — no Spark job), and the sequence
     # high-water mark lives in marker files managed by ``IndexCatalog``
-    # (``marker_last`` / ``marker_reserve`` — the local-fs assumption
+    # (``marker_last`` / ``marker_reserve``). The local-fs assumption
     # lives in that one swappable layer and fails loudly on non-local
-    # roots). The range is RESERVED before the parquet write: a crash
+    # roots. The range is RESERVED before the parquet write: a crash
     # in between leaves a harmless seq gap, never a reused range that
     # ``aggregate_frequency`` would double-count. Single concurrent
     # writer assumed (the reference is an embedded single-process
@@ -1305,16 +1251,13 @@ class SearchEngine:
         self._require_writable("query logging")
         last = self._last_log_seq()
         self.cat.marker_reserve("query_log", last + len(hits))
-        pdf = pd.DataFrame({
+        self.cat.append_rows("query_log", pa.table({
             "seq_id": np.arange(last + 1, last + 1 + len(hits), dtype=np.int64),
-            "ts": pd.Timestamp.now(tz="UTC"),
-            "token": hits,
-            "size": np.int32(1),
-        })
-        df = self.spark.createDataFrame(
-            pdf, "seq_id long, ts timestamp, token string, size int")
-        df.coalesce(1).write.mode("append").parquet(
-            self.cat.table_path("query_log"))
+            "ts": pa.array([pd.Timestamp.now(tz="UTC")] * len(hits),
+                           pa.timestamp("us", "UTC")),
+            "token": pa.array(hits, pa.string()),
+            "size": np.ones(len(hits), dtype=np.int32),
+        }))
 
     def _log_hits(self, tokens: Sequence[str], meta: Dict[str, dict]) -> None:
         """Append (token, 1) per query-token occurrence with ≥1 hit

@@ -111,7 +111,7 @@ def test_batch_encoder_matches_per_block_reference(case):
     cuts; decoding the blocks gives the rows back."""
     from itertools import groupby
 
-    from konlspark.build import _bm25_w, _decode_blocks, encode_postings
+    from konlspark.build import encode_postings
     batches, block_size, store_positions, avgdl, rows = case
     want = []
     for (term, salt), grp in groupby(rows, key=lambda r: (r["term"],
@@ -124,7 +124,7 @@ def test_batch_encoder_matches_per_block_reference(case):
             lens = np.array([r["doc_len"] for r in blk], dtype=np.int64)
             row = (term, salt, seq, len(blk), int(ids[0]), int(ids[-1]),
                    *codec.encode_block(ids, tfs, lens), int(tfs.max()),
-                   float(_bm25_w(tfs, lens, avgdl).max()))
+                   float(codec.bm25_weight(tfs, lens, avgdl).max()))
             if store_positions:
                 row += codec.encode_positions([r["positions"] for r in blk])
             want.append(row)
@@ -134,4 +134,79 @@ def test_batch_encoder_matches_per_block_reference(case):
             for r in out.to_pylist()] == want
     # the segment merge's decode inverts the encode
     assert [r for out in outs for r in
-            _decode_blocks(out, store_positions).to_pylist()] == rows
+            codec.decode_blocks(out).to_pylist()] == rows
+
+
+# -- the shared block -> rows decode vs the per-block reference ----------------
+
+@st.composite
+def _block_batches(draw):
+    """Random posting blocks as one Arrow batch (the columns a query
+    decode reads), possibly sliced to offset != 0 or to zero rows."""
+    import pyarrow as pa
+    n_blocks = draw(st.integers(min_value=0, max_value=10))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    cols = {c: [] for c in ("term", "n", "doc_ids_delta", "tfs",
+                            "doc_lens", "pos_counts", "positions")}
+    for _ in range(n_blocks):
+        n = draw(st.sampled_from([1, 1, 2, 7, 64]))  # single-posting blocks
+        ids = np.sort(rng.choice(2**40, size=n, replace=False)) + 1
+        tfs = rng.integers(1, 300, size=n)
+        lens = tfs + rng.integers(0, 10**5, size=n)
+        pos = [np.sort(rng.choice(10**4, size=int(rng.integers(0, 6)),
+                                  replace=False)) for _ in range(n)]
+        cols["term"].append(f"가{int(rng.integers(0, 4))}")
+        cols["n"].append(n)
+        for c, v in zip(("doc_ids_delta", "tfs", "doc_lens"),
+                        codec.encode_block(ids, tfs, lens)):
+            cols[c].append(v)
+        pc_, pv = codec.encode_positions(pos)
+        cols["pos_counts"].append(pc_)
+        cols["positions"].append(pv)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(cols["term"], pa.string()), pa.array(cols["n"], pa.int32())]
+        + [pa.array(cols[c], pa.binary()) for c in
+           ("doc_ids_delta", "tfs", "doc_lens", "pos_counts", "positions")],
+        names=list(cols))
+    lo = draw(st.integers(min_value=0, max_value=n_blocks))
+    hi = draw(st.integers(min_value=lo, max_value=n_blocks))
+    idf = {f"가{t}": draw(st.floats(min_value=0.01, max_value=20.0))
+           for t in draw(st.sets(st.integers(0, 4)))}
+    avgdl = draw(st.floats(min_value=1.0, max_value=500.0))
+    return batch.slice(lo, hi - lo), idf, avgdl
+
+
+@given(_block_batches())
+@settings(max_examples=150, deadline=None)
+def test_block_decode_matches_per_block_reference(case):
+    """``codec.decode_blocks`` — the one decode loop of the merge and
+    every query path — equals the per-block ``decode_block`` /
+    ``decode_positions`` decode byte for byte, BM25 scores included
+    (the per-block weight the query engine computed before it)."""
+    from konlspark.oracle import BM25_B, BM25_K1
+    batch, idf, avgdl = case
+    want = {"term": [], "doc_id": [], "tf": [], "doc_len": [],
+            "positions": [], "score": []}
+    for r in batch.to_pylist():
+        ids, tfs, lens = codec.decode_block(r["doc_ids_delta"], r["tfs"],
+                                            r["doc_lens"])
+        w = (tfs * (BM25_K1 + 1.0)) / (
+            tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * lens / avgdl))
+        want["term"] += [r["term"]] * len(ids)
+        want["doc_id"] += ids.tolist()
+        want["tf"] += tfs.tolist()
+        want["doc_len"] += lens.tolist()
+        want["positions"] += [p.tolist() for p in codec.decode_positions(
+            r["pos_counts"], r["positions"])]
+        want["score"].append(w * idf.get(r["term"], 0.0))
+    got = codec.decode_blocks(batch, avgdl, idf)
+    assert got.schema.names == list(want)
+    for c in ("term", "doc_id", "tf", "doc_len", "positions"):
+        assert got.column(c).to_pylist() == want[c], c
+    score = (np.concatenate(want["score"]) if want["score"]
+             else np.empty(0, dtype=np.float64))
+    assert got.column("score").to_numpy().tobytes() == score.tobytes()
+    # the lean boolean-search projection decodes the same ids
+    ids_only = codec.decode_blocks(batch.select(["n", "doc_ids_delta"]))
+    assert ids_only.schema.names == ["doc_id"]
+    assert ids_only.column("doc_id").to_pylist() == want["doc_id"]

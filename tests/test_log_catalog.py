@@ -90,3 +90,35 @@ def test_log_query_tokens_single_input_execution(spark, title_index):
     n = eng.log_query_tokens(toks)
     assert n == 3
     assert acc.value == 4  # one pass over the 4 input rows, not two
+
+
+def test_query_log_mixes_driver_and_spark_files(spark, title_index):
+    """Per-query appends are parquet files written from the driver
+    (``IndexCatalog.append_rows``); bulk ``log_query_tokens`` writes go
+    through Spark. One ``query_log/`` holding both reads back with one
+    schema — file by file and as a table — and every row."""
+    from pyspark.sql import functions as F
+    from konlspark.query import SearchEngine
+    root, _ = title_index
+    eng = SearchEngine(spark, root)
+    t1, t2 = sorted(r["term"] for r in
+                    eng.token_dict.select("term").limit(2).collect())
+    base = eng._last_log_seq()
+    eng._append_log([t1, t2])
+    assert eng.log_query_tokens(
+        spark.createDataFrame([(t1,), (t2,)], "token string")) == 2
+    eng._append_log([t2])
+    log_dir = eng.cat.table_path("query_log")
+    files = [f for f in os.listdir(log_dir) if f.endswith(".parquet")]
+    driver_files = [f for f in files if f.endswith("-driver.parquet")]
+    assert driver_files and len(driver_files) < len(files)
+    want = "struct<seq_id:bigint,ts:timestamp,token:string,size:int>"
+    for f in files:
+        assert spark.read.parquet(
+            os.path.join(log_dir, f)).schema.simpleString() == want, f
+    log = spark.read.parquet(log_dir)
+    assert log.schema.simpleString() == want
+    rows = log.filter(F.col("seq_id") > base).orderBy("seq_id").collect()
+    assert [r["seq_id"] for r in rows] == list(range(base + 1, base + 6))
+    assert sorted(r["token"] for r in rows) == sorted([t1, t2, t1, t2, t2])
+    assert all(r["ts"] is not None and r["size"] == 1 for r in rows)
