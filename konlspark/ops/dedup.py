@@ -3,73 +3,97 @@
 - **exact**: hash-groupBy keep-first (same window pattern as the index
   build's B2 dedup);
 - **ngram-Jaccard**: exact pairwise Jaccard over word 3-shingles, but
-  *candidate-generated by a shared-shingle join* (never an all-pairs
-  cross join): pairs that share no shingle are never materialized;
+  *candidate-generated from shared-shingle buckets* (never an
+  all-pairs cross join): pairs that share no shingle are never
+  materialized;
 - **MinHash + LSH**: k independent permutation-free min-hashes built
   from md5(seed || shingle) (portable to any SQL engine → oracle-able),
-  banded into LSH buckets; candidate pairs = same-bucket join; optional
+  banded into LSH buckets; candidate pairs = same-bucket pairs; optional
   exact-Jaccard verification of candidates;
 - **SimHash**: 60-bit sign-sketch of md5-based shingle hash bits
   (portable to SQL → oracle-able), Hamming-distance candidate grouping
   by band equality;
 - **embedding cosine near-dup**: see :mod:`konlspark.ops.similarity`.
 
-All are DataFrame-native: shuffles only on shingle/bucket keys (skew
-note: an ubiquitous shingle creates a hot key in the candidate join —
-cap posting length per shingle with ``max_df`` exactly like stopword
-elision in the index build).
+All are DataFrame-native: shuffles only on shingle/bucket keys, and
+every candidate generator is :func:`_bucket_pairs` (skew note: an
+ubiquitous shingle creates a hot bucket — cap its size with ``max_df``
+exactly like stopword elision in the index build).
 """
 
 from __future__ import annotations
 
-from typing import List
+from typing import List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _tokens(text_col):
-    return F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")
+def _tokens(text_col: str) -> Column:
+    """Whitespace tokens of the lower-cased top-level column
+    ``text_col``, empties dropped: the one tokenization every dedup and
+    text-statistics operator shares."""
+    return F.expr(f"filter(split(lower(`{text_col}`), '\\\\s+'), t -> t != '')")
 
 
-def _shingles_of(toks, n: int = 3):
-    """Shingle-array expression over an ALREADY-MATERIALIZED token
-    column. ``toks`` must be a bare column reference: passing a
-    computed expression re-evaluates the whole tokenization for every
-    ``toks[i + j]`` access inside the transform lambda — codegen
-    subexpression elimination does not reach into lambda bodies, so the
-    inlined form costs O(k) split+filter evaluations per shingle
-    (O(k^2) per doc). Measured r9 at 50k docs / 8 cores: 12-15 s
-    inlined vs 0.5 s with the tokens materialized first (25x)."""
-    k = F.size(toks)
-    return F.when(k >= n, F.array_distinct(F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
-    ))).otherwise(F.array(F.concat_ws(" ", toks)))
+def _md5_long(sql: str) -> str:
+    """SQL text: int64 of the first 15 hex chars of ``md5(sql)`` — the
+    same expression is writable in DuckDB, making the sketches built on
+    it oracle-able."""
+    return f"CAST(conv(substring(md5({sql}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def _shingle_df(df: DataFrame, text_col: str, id_col: str,
                 n: int) -> DataFrame:
-    """``(id, sh)`` with the token array materialized in its OWN
-    Project below the shingle Project. CollapseProject keeps the two
-    Projects separate because ``_toks`` is referenced more than once
-    by a non-cheap expression — verified in the physical plan."""
+    """``(id, sh)``: each doc's distinct word ``n``-shingles in
+    first-seen order; a doc of fewer than ``n`` tokens has its whole
+    token string as its one shingle.
+
+    The token array is materialized in its OWN Project below the
+    shingle Project (CollapseProject keeps them apart because ``_toks``
+    is referenced more than once by a non-cheap expression). Inlining
+    the tokenization instead re-evaluates it for every ``_toks[i + j]``
+    inside the transform lambda — codegen subexpression elimination does
+    not reach into lambda bodies — which costs O(k^2) per doc (measured
+    r9 at 50k docs / 8 cores: 12-15 s inlined vs 0.5 s materialized)."""
+    words = ", ".join(f"_toks[i + {j}]" for j in range(n))
     return (df
-            .select(F.col(id_col).alias("id"),
-                    _tokens(F.col(text_col)).alias("_toks"))
-            .select("id", _shingles_of(F.col("_toks"), n).alias("sh")))
+            .select(F.col(id_col).alias("id"), _tokens(text_col).alias("_toks"))
+            .selectExpr("id", f"""CASE WHEN size(_toks) >= {n}
+                THEN array_distinct(transform(sequence(0, size(_toks) - {n}),
+                                              i -> concat_ws(' ', {words})))
+                ELSE array(concat_ws(' ', _toks)) END AS sh"""))
 
 
-def _shingles(text_col, n: int = 3):
-    """Single-expression form (kept for the archival profiling tools);
-    the operator paths use :func:`_shingle_df` — see
-    :func:`_shingles_of` for why the inlined form is quadratic."""
-    toks = _tokens(text_col)
-    k = F.size(toks)
-    return F.when(k >= n, F.array_distinct(F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.concat_ws(" ", *[toks[i + j] for j in range(n)]),
-    ))).otherwise(F.array(F.concat_ws(" ", toks)))
+def _bucket_pairs(rows: DataFrame, keys: List[str],
+                  payload: Optional[str] = None,
+                  max_size: Optional[int] = None) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, of the ``id``s
+    of ``rows`` that share the value of ``keys`` (a bucket) in at least
+    one row. With ``payload``, that column rides along for each side as
+    ``<payload>_a`` / ``<payload>_b``; it must be a function of ``id``.
+    Buckets of more than ``max_size`` rows make no pairs.
+
+    One shuffle collects each bucket's ids; two generators then stream
+    its pairs — every id, then each larger id of the same bucket — so a
+    bucket's pairs are never built as one array, and ``rows``' lineage
+    runs once. A self-join on ``keys`` would run it once per side: AQE
+    reuses no exchange between the two sides of a self-join over a
+    cached or local input (PySpark 4.1.2). A hot bucket's pairs come
+    out of one task under either shape."""
+    item = f"named_struct('id', id, 'p', {payload})" if payload else "id"
+    key = ".id" if payload else ""
+    sized = ("size(ids) > 1" if max_size is None
+             else f"size(ids) BETWEEN 2 AND {max_size}")
+    cols = (["a.id AS id_a", "b.id AS id_b",
+             f"a.p AS {payload}_a", f"b.p AS {payload}_b"]
+            if payload else ["a AS id_a", "b AS id_b"])
+    return (rows.groupBy(*keys).agg(F.expr(f"collect_list({item}) AS ids"))
+            .filter(sized)
+            .selectExpr("ids", "explode(ids) AS a")
+            .selectExpr("a", f"explode(filter(ids, y -> y{key} > a{key})) AS b")
+            .selectExpr(*cols)
+            .distinct())
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -99,7 +123,7 @@ def _jaccard_over_candidates(base: DataFrame, cands: DataFrame,
 
     PAIR-DRIVEN (r5, kept): the ``cands`` pair list drives the work, so
     the expensive candidate-generation lineage (d4's k×md5 + band
-    self-join; d1's shingle self-join + distinct) executes exactly ONCE
+    buckets; d1's shingle buckets + distinct) executes exactly ONCE
     per action — the r5 fix that took d4 18.7→12.6 s.
 
     ARRAY-INTERSECT verify (r6, measured): instead of re-exploding
@@ -147,63 +171,26 @@ def shingle_pairs_jaccard(df: DataFrame, text_col: str = "text",
     """
     base = _shingle_df(df, text_col, id_col, n)
     # explode_outer, not explode: `sh` is never null or empty (the
-    # otherwise-branch of _shingles_of always yields a 1-element
-    # array), so the two are row-identical — but a plain explode makes
-    # the optimizer infer a `size(sh) > 0 AND isnotnull(sh)` filter
-    # and push the entire shingle expression down to the scan, where
+    # ELSE branch of _shingle_df always yields a 1-element array), so
+    # the two are row-identical — but a plain explode makes the
+    # optimizer infer a `size(sh) > 0 AND isnotnull(sh)` filter and
+    # push the entire shingle expression down to the scan, where
     # codegen subexpression elimination evaluates it EAGERLY for every
     # input row before the cheap pushed predicates (measured r9: d1
     # spent 35 core-s/run re-shingling all 50k docs to keep 40)
-    ex = base.select("id", F.explode_outer("sh").alias("shingle"))
-    rare = (ex.groupBy("shingle").agg(F.count("*").alias("df"))
-              .filter(F.col("df") <= max_df))
-    ex_rare = ex.join(rare.select("shingle"), "shingle")
-    # shuffle_hash on the self-join (r9): with the default broadcast
-    # plan one side becomes a BroadcastExchange whose subtree (explode
-    # + rare-aggregate join) is REBUILT from scratch — the expensive
-    # lineage runs twice. A shuffle join hash-partitions both sides on
-    # the same key from plan-identical subtrees, so AQE materializes
-    # ONE exchange and the second side is a ReusedExchange (it may
-    # still broadcast the materialized stage output at runtime —
-    # without recompute). Also the scale-correct strategy: a
-    # corpus-sized shingle table is never broadcastable.
-    cands = (
-        ex_rare.alias("a").hint("shuffle_hash")
-        .join(ex_rare.alias("b").hint("shuffle_hash"),
-              (F.col("a.shingle") == F.col("b.shingle"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    ex = base.selectExpr("id", "explode_outer(sh) AS shingle")
+    # a doc's shingles are distinct, so a shingle's bucket size is its
+    # document frequency
+    cands = _bucket_pairs(ex, ["shingle"], max_size=max_df)
     return _jaccard_over_candidates(base, cands, threshold)
-
-
-def _minhash_cols(n_hashes: int) -> List:
-    """k min-hashes per row from an exploded shingle column: value =
-    int64 of the first 15 hex chars of md5(seed || shingle) — the same
-    expression is writable in DuckDB, making this oracle-able."""
-    return [
-        F.min(F.conv(F.substring(F.md5(F.concat(F.lit(f"s{i}:"),
-                                                F.col("shingle"))), 1, 15),
-                     16, 10).cast("long")).alias(f"mh{i}")
-        for i in range(n_hashes)
-    ]
-
-
-def _seeded_hash_cols(n_hashes: int) -> List:
-    """The k seeded digest VALUES (not aggregates) for one shingle."""
-    return [
-        F.conv(F.substring(F.md5(F.concat(F.lit(f"s{i}:"),
-                                          F.col("shingle"))), 1, 15),
-               16, 10).cast("long").alias(f"_h{i}")
-        for i in range(n_hashes)
-    ]
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 3,
                        n_hashes: int = 16) -> DataFrame:
-    """(id, mh0..mh{k-1}) MinHash signature table.
+    """(id, mh0..mh{k-1}) MinHash signature table: ``mh<i>`` is the
+    minimum over the doc's shingles of :func:`_md5_long` of
+    ``'s<i>:' || shingle``.
 
     The k seeded digests are computed once per DISTINCT shingle and
     joined back onto the (id, shingle) pairs (r9): shingle vocabularies
@@ -216,22 +203,24 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     the old plan fed straight into the aggregate, and the k-x digest
     saving still dominates whenever shingles repeat at all.
     Values are bit-identical to the per-occurrence form: min over a
-    doc's shingles of h_i(shingle) is invariant to where h_i runs."""
+    doc's shingles of h_i(shingle) is invariant to where h_i runs.
+    The plan is built from SQL text: one parse per projection instead
+    of one gateway round trip per expression node."""
     ex = (_shingle_df(df, text_col, id_col, n)
-          .select("id", F.explode_outer("sh").alias("shingle")))
-    hashed = (ex.select("shingle").distinct()
-              .select("shingle", *_seeded_hash_cols(n_hashes)))
+          .selectExpr("id", "explode_outer(sh) AS shingle"))
+    hashed = ex.select("shingle").distinct().selectExpr("shingle", *[
+        _md5_long(f"concat('s{i}:', shingle)") + f" AS _h{i}"
+        for i in range(n_hashes)])
     return (ex.join(hashed, "shingle")
             .groupBy("id")
-            .agg(*[F.min(f"_h{i}").alias(f"mh{i}")
-                   for i in range(n_hashes)]))
+            .agg(*[F.expr(f"min(_h{i}) AS mh{i}") for i in range(n_hashes)]))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       n_hashes: int = 16, bands: int = 4,
                       verify_threshold: float = 0.0) -> DataFrame:
-    """LSH candidate pairs: band signatures → bucket-join.
+    """LSH candidate pairs: band signatures → bucket pairs.
 
     ``bands`` bands of ``n_hashes/bands`` rows each; two docs are
     candidates iff some band signature matches exactly. With
@@ -239,46 +228,25 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     Jaccard (semi-joined to candidates only — the expensive exact pass
     touches candidate docs, not the corpus).
 
-    Pair-generation shape, MEASURED (r4): a groupBy-(band, sig) +
-    collect_list + in-bucket pair-explode variant (one aggregation, no
-    self-join) was tried to avoid recomputing the k×md5 signature
-    lineage on both probe sides — but under the tuned session Spark's
-    exchange reuse already computes the signature pass ONCE for both
-    sides of this self-join (one exchange write, two reads), and the
-    interleaved min-of-3 at sf0.1/32c came out 13.9s (join) vs 14.8s
-    (bucket-agg). The join also spreads a degenerate bucket's
-    quadratic output across tasks where collect_list would build it in
-    one row — so the self-join stays.
+    Pair generation is :func:`_bucket_pairs` over the ``(band_no,
+    sig)`` buckets. An r4 measurement (sf0.1/32c, 13.9 s self-join vs
+    14.8 s bucket-agg) had kept a self-join here on the belief that AQE
+    computes the signature lineage once for both join sides. On
+    PySpark 4.1.2 over a cached or local input it reuses no exchange,
+    so the self-join ran the 16-digest stage twice (12 jobs vs 8 now);
+    and the join does not spread a hot bucket either — its matches
+    come out of one task, as they do here.
     """
-    rows_per_band = n_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, n_hashes)
-    band_cols = [
-        F.md5(F.concat_ws(",", F.lit(b), *[
-            F.col(f"mh{b * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ])).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("id", *band_cols)
-    stacked = banded.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band_no"), F.col(f"band{b}").alias("sig"))
-            for b in range(bands)
-        ])).alias("bd"),
-    ).select("id", "bd.band_no", "bd.sig")
-    # shuffle_hash: share ONE materialized exchange between the two
-    # plan-identical sides instead of rebuilding the k-digest signature
-    # lineage for a broadcast side (see shingle_pairs_jaccard)
-    cands = (
-        stacked.alias("a").hint("shuffle_hash").join(
-            stacked.alias("b").hint("shuffle_hash"),
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    per_band = n_hashes // bands
+    band_sigs = ", ".join(
+        f"named_struct('band_no', {b}, 'sig', md5(concat_ws(',', '{b}', "
+        + ", ".join(f"CAST(mh{b * per_band + r} AS STRING)"
+                    for r in range(per_band))
+        + ")))"
+        for b in range(bands))
+    stacked = (minhash_signatures(df, text_col, id_col, n, n_hashes)
+               .selectExpr("id", f"inline(array({band_sigs}))"))
+    cands = _bucket_pairs(stacked, ["band_no", "sig"])
     if verify_threshold <= 0:
         return cands
     base = _shingle_df(df, text_col, id_col, n)
@@ -293,48 +261,44 @@ def _simhash_vote(batches):
     vectorised pass per chunk of an Arrow batch (module level, so the
     stage function is a konlspark global)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
-    for pdf in batches:
-        if not len(pdf):
-            continue
+    for batch in batches:
         # chunk so the (hashes x 60) sign matrix stays ~tens of MB
-        for lo in range(0, len(pdf), 4096):
-            sub = pdf.iloc[lo:lo + 4096]
-            runs = [np.asarray(h, dtype=np.int64) for h in sub["hs"]]
-            lens = np.fromiter((len(r) for r in runs), dtype=np.int64,
-                               count=len(runs))
-            flat = np.concatenate(runs)
+        for lo in range(0, batch.num_rows, 4096):
+            sub = batch.slice(lo, 4096)
+            hs = sub.column("hs")
+            # a slice keeps its parent's absolute offsets; flatten()
+            # yields only the slice's values. Every row has ≥1 hash.
+            offsets = hs.offsets.to_numpy()
+            flat = hs.flatten().to_numpy()
             signs = (((flat[:, None] >> bit_idx) & 1) * 2 - 1).astype(
                 np.int32)
-            offsets = np.zeros(len(runs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            votes = np.add.reduceat(signs, offsets, axis=0)
+            votes = np.add.reduceat(signs, offsets[:-1] - offsets[0],
+                                    axis=0)
             sims = ((votes > 0).astype(np.int64) << bit_idx).sum(axis=1)
-            yield pd.DataFrame({"id": sub["id"].to_numpy(),
-                                "simhash": sims})
+            yield pa.RecordBatch.from_arrays(
+                [sub.column("id").cast(pa.int64()), pa.array(sims)],
+                names=["id", "simhash"])
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 2) -> DataFrame:
     """60-bit SimHash per doc: majority vote per bit over the md5-based
-    shingle hash (int64 of the first 15 hex chars of md5 — the same
-    expression DuckDB can evaluate, so the sketch is oracle-able).
+    shingle hash (:func:`_md5_long` — the same expression DuckDB can
+    evaluate, so the sketch is oracle-able).
 
     Shape: the shingle hashes are computed per ROW as an array column
-    (pure codegen — no explode, no shuffle), then one ``mapInPandas``
+    (pure codegen — no explode, no shuffle), then one ``mapInArrow``
     stage does the per-bit vote vectorized over hundreds of docs per
     Arrow batch (``np.add.reduceat`` over the concatenated hash runs).
     A 60-aggregate codegen formulation chokes the optimizer and a
     per-doc ``applyInPandas`` pays one Python call per doc; this is one
     narrow map stage end to end.
     """
-    base = (_shingle_df(df, text_col, id_col, n)
-            .select("id", F.transform(
-                "sh",
-                lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-                .cast("long")).alias("hs")))
-    return base.mapInPandas(_simhash_vote, "id long, simhash long")
+    return (_shingle_df(df, text_col, id_col, n)
+            .selectExpr("id", f"transform(sh, s -> {_md5_long('s')}) AS hs")
+            .mapInArrow(_simhash_vote, "id long, simhash long"))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
@@ -342,36 +306,19 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                        max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60 bits into max_hamming+1
     chunks (pigeonhole: ≤max_hamming differing bits ⇒ ≥1 identical
-    chunk), bucket-join, verify Hamming distance exactly. The chunks
-    cover all 60 bits, so the result is EXACTLY the set of pairs with
-    Hamming distance ≤ max_hamming — no recall loss (and therefore
-    SQL-oracle-able as an all-pairs Hamming filter)."""
-    sig = simhash_signatures(df, text_col, id_col, n)
+    chunk), pair docs within each chunk bucket, verify Hamming distance
+    exactly. The chunks cover all 60 bits, so the result is EXACTLY the
+    set of pairs with Hamming distance ≤ max_hamming — no recall loss
+    (and therefore SQL-oracle-able as an all-pairs Hamming filter)."""
     chunks = max_hamming + 1
     width = -(-SIMHASH_BITS // chunks)
-    stacked = sig.select("id", "simhash", F.explode(F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk_no"),
-            F.shiftrightunsigned(F.col("simhash"), c * width)
-             .bitwiseAND(F.lit((1 << width) - 1)).alias("chunk"),
-        ) for c in range(chunks)
-    ])).alias("ck")).select("id", "simhash", "ck.chunk_no", "ck.chunk")
-    # shuffle_hash: the signature side holds the mapInPandas vote —
-    # rebuilt wholesale for a broadcast side, reused as ONE
-    # materialized exchange under a shuffle join (measured r9 at
-    # sf1.0/32c: 2.0 -> 1.4 s min-of-3, cold 12.6 -> 1.8 s)
-    pairs = (
-        stacked.alias("a").hint("shuffle_hash").join(
-            stacked.alias("b").hint("shuffle_hash"),
-            (F.col("a.chunk_no") == F.col("b.chunk_no"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"))
-        .distinct()
-        .withColumn("hamming", F.bit_count(
-            F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    return pairs
+    chunk_cols = ", ".join(
+        f"named_struct('chunk_no', {c}, 'chunk', "
+        f"shiftrightunsigned(simhash, {c * width}) & {(1 << width) - 1})"
+        for c in range(chunks))
+    stacked = (simhash_signatures(df, text_col, id_col, n)
+               .selectExpr("id", "simhash", f"inline(array({chunk_cols}))"))
+    return (_bucket_pairs(stacked, ["chunk_no", "chunk"], payload="simhash")
+            .selectExpr("id_a", "id_b",
+                        "bit_count(simhash_a ^ simhash_b) AS hamming")
+            .filter(f"hamming <= {max_hamming}"))

@@ -6,9 +6,9 @@
 - **all-pairs near-dup**: normalized brute force for modest candidate
   sets (after an LSH/dedup prefilter).
 - **LSH-bucketed ANN (scale path)**: random-hyperplane signatures →
-  bucket-join, exact cosine verification inside buckets only. Signs
-  come from deterministic per-dimension hash weights (no RNG at plan
-  time; resumable/reproducible).
+  same-bucket pairs, exact cosine verification of those pairs only.
+  Signs come from deterministic per-dimension hash weights (no RNG at
+  plan time; resumable/reproducible).
 """
 
 from __future__ import annotations
@@ -17,6 +17,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _bucket_pairs
 
 
 def _dot(a, b):
@@ -98,31 +100,21 @@ def _hyperplane_sign(vec_col, plane: int, dim: int):
 def ann_lsh_pairs(df: DataFrame, dim: int, n_planes: int = 16,
                   bands: int = 4, threshold: float = 0.8,
                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN near-dup pairs: random-hyperplane LSH bucket-join + exact
-    cosine verification of candidates only."""
+    """ANN near-dup pairs: random-hyperplane LSH bucket pairs
+    (:func:`konlspark.ops.dedup._bucket_pairs`) + exact cosine
+    verification of candidates only."""
     v = F.col(vec_col).cast("array<double>")
     bits = [_hyperplane_sign(v, p, dim).alias(f"bit{p}") for p in range(n_planes)]
-    sig = df.select(F.col(id_col).alias("id"), v.alias("emb"), *bits)
     per_band = n_planes // bands
-    stacked = sig.select("id", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band_no"),
-                 F.concat_ws("", *[F.col(f"bit{b * per_band + r}").cast("string")
-                                   for r in range(per_band)]).alias("sig"))
-        for b in range(bands)
-    ])).alias("bd")).select("id", "bd.band_no", "bd.sig")
-    # shuffle_hash: share one materialized signature exchange between
-    # the two plan-identical sides instead of rebuilding the
-    # 16-projection lineage for a broadcast side (same fix as the
-    # dedup LSH self-joins, r9)
-    cands = (
-        stacked.alias("a").hint("shuffle_hash").join(
-            stacked.alias("b").hint("shuffle_hash"),
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    band_sigs = ", ".join(
+        f"named_struct('band_no', {b}, 'sig', concat_ws('', "
+        + ", ".join(f"CAST(bit{b * per_band + r} AS STRING)"
+                    for r in range(per_band))
+        + "))"
+        for b in range(bands))
+    stacked = (df.select(F.col(id_col).alias("id"), *bits)
+               .selectExpr("id", f"inline(array({band_sigs}))"))
+    cands = _bucket_pairs(stacked, ["band_no", "sig"])
     return cosine_pairs(df, threshold, id_col, vec_col, prefilter=cands)
 
 

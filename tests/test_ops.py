@@ -3,10 +3,14 @@ textstats / multimodal plumbing) against pure-pandas oracles."""
 
 import hashlib
 import itertools
+import re
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from konlspark.ops import dedup, multimodal, similarity, textstats
@@ -88,6 +92,113 @@ def test_simhash_near_pairs(docs_df):
     # hamming verified exactly
     for (a, b), h in pairs.items():
         assert bin(sig[a] ^ sig[b]).count("1") == h
+
+
+N_IDS = 13
+
+
+def _py_bucket_pairs(rows, n_keys, pay, max_size):
+    buckets = defaultdict(list)
+    for r in rows:
+        buckets[r[1:1 + n_keys]].append(r[0])
+    pairs = set()
+    for ids in buckets.values():
+        if max_size is None or len(ids) <= max_size:
+            pairs |= {(a, b) for a in ids for b in ids if a < b}
+    return sorted((a, b, pay[a], pay[b]) if pay else (a, b)
+                  for a, b in pairs)
+
+
+@given(rows=st.lists(st.tuples(st.integers(0, N_IDS - 1), st.integers(0, 3),
+                               st.integers(0, 2)), max_size=30),
+       n_keys=st.sampled_from([1, 2]),
+       pay=st.none() | st.lists(st.integers(-50, 50), min_size=N_IDS,
+                                max_size=N_IDS),
+       max_size=st.none() | st.integers(2, 6))
+# singleton buckets only; one hot bucket, kept and over max_size; a
+# pair sharing three buckets
+@example(rows=[(0, 0, 0), (1, 1, 0), (2, 2, 0)], n_keys=1, pay=None,
+         max_size=None)
+@example(rows=[(i, 0, 0) for i in range(N_IDS)] + [(3, 1, 0), (5, 1, 0)],
+         n_keys=2, pay=list(range(100, 100 + N_IDS)), max_size=None)
+@example(rows=[(i, 0, 0) for i in range(N_IDS)] + [(3, 1, 0), (5, 1, 0)],
+         n_keys=1, pay=None, max_size=4)
+@example(rows=[(4, k, k % 2) for k in range(3)] + [(9, k, k % 2) for k in range(3)],
+         n_keys=2, pay=list(range(N_IDS, 0, -1)), max_size=None)
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_bucket_pairs_matches_brute_force(spark, rows, n_keys, pay, max_size):
+    """``_bucket_pairs`` == Python all-pairs within each bucket: every
+    pair once however many buckets it shares, id_a < id_b, buckets over
+    ``max_size`` rows dropped, and each side's payload its own."""
+    df = spark.createDataFrame(
+        [(i, k1, k2, pay[i] if pay else 0) for i, k1, k2 in rows],
+        "id long, k1 int, k2 int, p long")
+    keys = ["k1", "k2"][:n_keys]
+    got = dedup._bucket_pairs(df, keys, payload="p" if pay else None,
+                              max_size=max_size).collect()
+    assert all(r["id_a"] < r["id_b"] for r in got)
+    assert sorted(tuple(r) for r in got) == _py_bucket_pairs(
+        rows, n_keys, pay, max_size)
+
+
+def _final_plan_nodes(df):
+    """Every node of ``df``'s executed plan — the final adaptive plan,
+    query-stage subplans included."""
+    todo, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            nodes.append(node)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_candidate_lineage_runs_once_on_cached_input(spark):
+    """Candidate generation runs its input lineage once. Over a cached
+    input AQE reuses no exchange, so a self-join on the bucket columns
+    would run the signature lineage once per side."""
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string").cache()
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 2)]) for i in range(12)],
+        "vec_id long, embedding array<float>").cache()
+    ops = {
+        "simhash": (dedup.simhash_near_pairs(docs, max_hamming=16),
+                    {"chunk_no", "chunk"}),
+        "minhash": (dedup.minhash_lsh_pairs(docs, n_hashes=16, bands=8,
+                                            verify_threshold=0.5),
+                    {"band_no", "sig"}),
+        "jaccard": (dedup.shingle_pairs_jaccard(docs, threshold=0.2),
+                    {"shingle"}),
+        "ann": (similarity.ann_lsh_pairs(emb, dim=3, threshold=0.5),
+                {"band_no", "sig"}),
+    }
+    try:
+        for name, (df, bucket_cols) in ops.items():
+            df.collect()
+            nodes = _final_plan_nodes(df)
+            names = [n.nodeName() for n in nodes]
+            assert "InMemoryTableScan" in names, name
+            if name == "simhash":
+                assert sum(bool(re.search("MapIn(Arrow|Pandas)", n))
+                           for n in names) == 1
+            if name == "minhash":
+                assert sum(str(n.expressions().toString())
+                           .count("concat(s0:, ") for n in nodes) == 1
+            for node, node_name in zip(nodes, names):
+                if "Join" in node_name and "NestedLoop" not in node_name:
+                    keys = set(re.findall(r"(\w+)#", str(
+                        node.leftKeys().toString())))
+                    assert not keys & bucket_cols, (name, node_name, keys)
+    finally:
+        docs.unpersist()
+        emb.unpersist()
 
 
 def test_cosine_topk_matches_numpy(spark):
